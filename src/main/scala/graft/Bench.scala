@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times the headline TPC-H-adapted sweep
   * on SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -13,49 +11,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Partition count auto-sizes from data volume: BYTE-based and uncapped
-    // (Tables.volumeParts — ~12 MB of on-disk fact input per partition, the
-    // byte equivalent of the former 1M-rows rule; r14 removed the 200-count
-    // cap, which at 100 TB meant multi-GB partitions — partitions are now
-    // bounded by SIZE at every scale). At sf0.1 (10.8 MB lineitem) that is
-    // ONE partition — each query is a single-task pipeline with zero
-    // shuffle-scheduling overhead, and the 22-query workload parallelizes
-    // ACROSS queries instead (measured: 1 part beats 8 parts ~1.8x here).
-    // MEASURED at the >1-partition regime (tools/gen_scaled.py, SF1-volume
-    // 6M-row lineitem -> parts=6, AQE on; BENCH_SCALED.json): workload wall
-    // at 0.23x of the reference's 25.6 s SF1 baseline; 10x the data costs
-    // ~2.4x the wall — the sublinear scaling the rule was designed for,
-    // verified not asserted.
-    val cache = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // Above the SHJ size gate the forced shuffle_hash hints are dropped
-      // (Tables.shjSized); these two settings are the graceful fallback the
-      // guide (§3.1/§9) prescribes: the planner may still pick shuffled-hash
-      // when its per-partition size conditions hold, AQE may rewrite SMJ to
-      // SHJ when every post-shuffle partition fits the same budget, and
-      // sort-merge — which spills — remains the safety net.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        Tables.ShjGateBytes.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS",
-      Tables.volumeParts(sfDir).toString).toString
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE follows the same data-volume rule as the partition count: with a
-    // single shuffle partition there is nothing for it to adapt (no skew, no
-    // partition coalescing, no join re-plan) and its per-stage re-optimization
-    // is pure overhead (~14% of sequential wall here); once the volume rule
-    // yields >1 partition — i.e. at any real scale — AQE is on.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", (parts.toInt > 1).toString)
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+    val spark = GraftSession.build("graft-bench", sfDir)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
 
     // Warm the table cache: a long-running analytics server keeps its hot
     // working set in memory (Spark's columnar cache), fact tables clustered
@@ -63,10 +21,9 @@ object Bench {
     // cache/bucketing + parquet page cache; the bench measures query
     // compute, not cold object-store reads (the reference's published
     // numbers are likewise warm: local MinIO + OS page cache).
-    if (cache)
-      try Tables.prime(spark, sfDir, parts.toInt)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] prime failed, running uncached: ${e.getMessage}") }
+    try Tables.prime(spark, sfDir, parts.toInt)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] prime failed, running uncached: ${e.getMessage}") }
 
     // Build + analyze each query once (the engine's prepared-statement /
     // plan-cache role); timed passes re-execute the analyzed plan, which is
@@ -244,72 +201,36 @@ object Bench {
       Tables.registerAll(spark, sfDir)
       val store = new Store(spark,
         java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-      val server = new PgWireServer(spark, store, 0)
-      val port = server.start()
+      val port = new PgWireServer(spark, store, 0).start()
       val copySql = "COPY (SELECT * FROM lineitem) TO STDOUT"
       val selectSql = "SELECT * FROM lineitem"
-      def drainSql(sql0: String): (Long, Long, Double) = {
-        val sock = new java.net.Socket("127.0.0.1", port)
-        sock.setTcpNoDelay(true)
-        val in = new java.io.DataInputStream(
-          new java.io.BufferedInputStream(sock.getInputStream, 1 << 20))
-        val out = new java.io.DataOutputStream(sock.getOutputStream)
-        val params = "user\u0000graft\u0000database\u0000graft\u0000\u0000"
-          .getBytes("UTF-8")
-        out.writeInt(8 + params.length); out.writeInt(196608)
-        out.write(params); out.flush()
-        var ready = false
-        while (!ready) { // drain startup until ReadyForQuery
-          val t = in.read().toChar; val n = in.readInt()
-          in.skipNBytes(n - 4); if (t == 'Z') ready = true
+      def client() = new PgWireClient("127.0.0.1", port, "graft", "graft")
+      // The one read loop of the wire passes: reads backend messages through
+      // the first tagged `stop` (or through ReadyForQuery after an
+      // ErrorResponse, which then throws), handing each DataRow/CopyData
+      // payload to `onData`.
+      def await(c: PgWireClient, stop: Char)(onData: Array[Byte] => Unit): Unit = {
+        var err: PgClientException = null
+        var t = ' '
+        while (t != stop && !(t == 'Z' && err != null)) {
+          t = c.readType()
+          val body = c.readBody()
+          if (t == 'E') { if (err == null) err = PgWireClient.errorFrom(body) }
+          else if (t == 'd' || t == 'D') onData(body)
         }
-        val q = sql0.getBytes("UTF-8")
+        if (err != null) throw err
+      }
+      def send(c: PgWireClient, sql: String): Unit =
+        c.sendMsg('Q') { b => b.write(sql.getBytes("UTF-8")); b.write(0) }
+      def drainSql(sql: String): (Long, Long, Double) = {
+        val c = client()
+        var rows = 0L; var bytes = 0L
         val t0 = System.nanoTime()
-        out.writeByte('Q'); out.writeInt(4 + q.length + 1)
-        out.write(q); out.writeByte(0); out.flush()
-        var rows = 0L; var bytes = 0L; var done = false
-        while (!done) {
-          val t = in.read().toChar; val n = in.readInt()
-          if (t == 'd' || t == 'D') { rows += 1; bytes += n - 4 }
-          in.skipNBytes(n - 4)
-          if (t == 'Z') done = true
-        }
+        send(c, sql)
+        await(c, 'Z') { b => rows += 1; bytes += b.length }
         val sec = (System.nanoTime() - t0) / 1e9
-        sock.close()
+        c.close()
         (rows, bytes, sec)
-      }
-      def connect(): (java.net.Socket, java.io.DataInputStream, java.io.DataOutputStream) = {
-        val sock = new java.net.Socket("127.0.0.1", port)
-        sock.setTcpNoDelay(true)
-        val in = new java.io.DataInputStream(
-          new java.io.BufferedInputStream(sock.getInputStream, 1 << 16))
-        val out = new java.io.DataOutputStream(sock.getOutputStream)
-        val params = "user\u0000graft\u0000database\u0000graft\u0000\u0000"
-          .getBytes("UTF-8")
-        out.writeInt(8 + params.length); out.writeInt(196608)
-        out.write(params); out.flush()
-        var ready = false
-        while (!ready) {
-          val t = in.read().toChar; val n = in.readInt()
-          in.skipNBytes(n - 4); if (t == 'Z') ready = true
-        }
-        (sock, in, out)
-      }
-      def execOn(in: java.io.DataInputStream, out: java.io.DataOutputStream,
-          sql0: String): Unit = {
-        val q = sql0.getBytes("UTF-8")
-        out.writeByte('Q'); out.writeInt(4 + q.length + 1)
-        out.write(q); out.writeByte(0); out.flush()
-        var done = false; var err: String = null
-        while (!done) {
-          val t = in.read().toChar; val n = in.readInt()
-          if (t == 'E' && err == null) {
-            val b = new Array[Byte](n - 4); in.readFully(b)
-            err = new String(b, "UTF-8").replace('\u0000', '|')
-          } else in.skipNBytes(n - 4)
-          if (t == 'Z') done = true
-        }
-        if (err != null) throw new RuntimeException(s"wire error on [$sql0]: $err")
       }
       // ---- concurrent same-table ingest (insert-only txns commit
       // concurrently since r12; before that the per-table write gate
@@ -319,24 +240,23 @@ object Bench {
         // shared table would bias the later pass slow (growth, not
         // concurrency)
         val tbl = s"bench_ingest_$tag"
-        val (s0, i0, o0) = connect()
-        execOn(i0, o0, s"CREATE TABLE $tbl (a int, b text)")
-        s0.close()
-        val conns = (1 to clients).map(_ => connect())
-        conns.foreach { case (_, i, o) =>
-          execOn(i, o, s"INSERT INTO $tbl VALUES (0, 'warm$tag')") }
+        val c0 = client()
+        c0.query(s"CREATE TABLE $tbl (a int, b text)")
+        c0.close()
+        val conns = (1 to clients).map(_ => client())
+        conns.foreach(_.query(s"INSERT INTO $tbl VALUES (0, 'warm$tag')"))
         val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
         val t0 = System.nanoTime()
-        val futs = conns.zipWithIndex.map { case ((_, i, o), ci) =>
+        val futs = conns.zipWithIndex.map { case (c, ci) =>
           pool.submit(new Runnable { def run(): Unit =
-            (1 to txns).foreach { k => execOn(i, o,
+            (1 to txns).foreach { k => c.query(
               s"BEGIN; INSERT INTO $tbl VALUES ($k, '$tag-$ci'); " +
               s"INSERT INTO $tbl VALUES (${k + txns}, '$tag-$ci-b'); COMMIT") }
           })
         }
         futs.foreach(_.get()); pool.shutdown()
         val sec = (System.nanoTime() - t0) / 1e9
-        conns.foreach(_._1.close())
+        conns.foreach(_.close())
         clients * txns / sec
       }
       val ingest = scala.util.Try {
@@ -358,56 +278,31 @@ object Bench {
       // ---- COPY FROM STDIN: the bulk-LOAD funnel (executor-parallel
       // decode since r12). Input bytes pre-captured from one COPY-out
       // drain so only the ingest side is timed; fresh table per pass. ----
-      def captureCopy(sql0: String): Array[Byte] = {
-        val (sock, in, out) = connect()
-        val q = sql0.getBytes("UTF-8")
-        out.writeByte('Q'); out.writeInt(4 + q.length + 1)
-        out.write(q); out.writeByte(0); out.flush()
+      def captureCopy(sql: String): Array[Byte] = {
+        val c = client()
         val bb = new java.io.ByteArrayOutputStream(64 << 20)
-        var done = false
-        while (!done) {
-          val t = in.read().toChar; val n = in.readInt()
-          if (t == 'd') {
-            val b = new Array[Byte](n - 4); in.readFully(b); bb.write(b)
-          } else in.skipNBytes(n - 4)
-          if (t == 'Z') done = true
-        }
-        sock.close(); bb.toByteArray
+        send(c, sql)
+        await(c, 'Z')(bb.write(_))
+        c.close(); bb.toByteArray
       }
       def copyInSec(tag: String, payload: Array[Byte]): Double = {
         val tbl = s"bench_copyin_$tag"
-        val (s0, i0, o0) = connect()
-        execOn(i0, o0, s"CREATE TABLE $tbl AS SELECT * FROM lineitem LIMIT 0")
-        val q = s"COPY $tbl FROM STDIN".getBytes("UTF-8")
+        val c = client()
+        c.query(s"CREATE TABLE $tbl AS SELECT * FROM lineitem LIMIT 0")
         val t0 = System.nanoTime()
-        o0.writeByte('Q'); o0.writeInt(4 + q.length + 1)
-        o0.write(q); o0.writeByte(0); o0.flush()
-        var inCopy = false
-        while (!inCopy) {
-          val t = i0.read().toChar; val n = i0.readInt(); i0.skipNBytes(n - 4)
-          if (t == 'E') throw new RuntimeException("copy-in refused")
-          if (t == 'G') inCopy = true
-        }
+        send(c, s"COPY $tbl FROM STDIN")
+        await(c, 'G')(_ => ())
         var off = 0
         while (off < payload.length) {
           val len = math.min(1 << 20, payload.length - off)
-          o0.writeByte('d'); o0.writeInt(4 + len); o0.write(payload, off, len)
+          c.sendMsg('d')(_.write(payload, off, len))
           off += len
         }
-        o0.writeByte('c'); o0.writeInt(4); o0.flush()
-        var done = false; var err: String = null
-        while (!done) {
-          val t = i0.read().toChar; val n = i0.readInt()
-          if (t == 'E' && err == null) {
-            val b = new Array[Byte](n - 4); i0.readFully(b)
-            err = new String(b, "UTF-8").replace(' ', '|')
-          } else i0.skipNBytes(n - 4)
-          if (t == 'Z') done = true
-        }
+        c.sendMsg('c')(_ => ())
+        await(c, 'Z')(_ => ())
         val sec = (System.nanoTime() - t0) / 1e9
-        if (err != null) throw new RuntimeException(s"copy-in error: $err")
-        execOn(i0, o0, s"DROP TABLE $tbl")
-        s0.close()
+        c.query(s"DROP TABLE $tbl")
+        c.close()
         sec
       }
       // payload bounded to 1M rows (~120 MB text): the measure is ingest
@@ -510,6 +405,7 @@ object Bench {
       f""""wall_min":${wallSamples.min}%.3f,"sequential_min":${seqTotals.min}%.3f,""" +
       f""""control_wall":${median(ctrlTotals)}%.3f,""" + wireCompact +
       s""""failed_query_count":${failedQueries.size},""" +
+      s""""cpus":${GraftSession.cpus},"shuffle_partitions":$parts,""" +
       s""""commit":"$gitCommit","sf":"$sfDir","detail":"see preceding line"}""")
     spark.stop()
   }

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of the named queries
   * (default: a representative set) so scan pushdown, broadcast choices, and
-  * whole-stage codegen coverage can be reviewed. Usage:
+  * whole-stage codegen coverage can be reviewed. The session is Bench's:
+  * [[GraftSession]] plus the primed cache, so the plan printed is the one
+  * the bench executes (InMemoryScan over the clustered layout). Usage:
   *   graft.Explain [sfDir] [queryName...]
   */
 object Explain {
@@ -12,27 +12,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q01_pricing_summary", "q03_shipping_priority", "q05_local_supplier_volume")
-    // Env overrides so a plan capture can mirror Bench's exact session
-    // config (shuffle partitions, AQE) instead of this tool's defaults.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "8")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        Tables.ShjGateBytes.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-explain", sfDir)
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_PRIME=true reproduces Bench's primed-cache layout so the
-    // captured plan is the one the bench actually executes (InMemoryScan
-    // with the clustered partitioning) rather than the cold parquet plan.
-    if (sys.env.get("SPARK_GRAFT_PRIME").contains("true"))
-      Tables.prime(spark, sfDir, parts.toInt)
+    Tables.prime(spark, sfDir, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     names.foreach { n =>
       println(s"========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,11 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 
-/** Dev profiler (guide §1): mirrors Bench's exact session (cache prime,
-  * volume-derived shuffle partitions, AQE rule, 64m broadcast) and, for each
-  * named query, splits a timed noop save into
+/** Dev profiler (guide §1): runs Bench's session ([[GraftSession]] plus the
+  * cache prime) and, for each named query, splits a timed noop save into
   *   - task time:   sum of executor run time over all tasks (from listener)
   *   - stage span:  submission->completion wall of all stages
   *   - driver rest: save wall minus stage span = planning + job bookkeeping
@@ -14,30 +12,14 @@ import org.apache.spark.sql.SparkSession
   * per-stage breakdown of the slowest query when asked.
   *
   * Usage: graft.Profile [sfDir] [name ...]  (default: the 22 bench queries)
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_PARTS, SPARK_GRAFT_SAMPLES
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_PART_BYTES, SPARK_GRAFT_SAMPLES
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args.head else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.benchNames
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        Tables.ShjGateBytes.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS",
-      Tables.volumeParts(sfDir).toString).toString
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    val aqe = (parts.toInt > 1).toString
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+    val spark = GraftSession.build("graft-profile", sfDir)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     Tables.prime(spark, sfDir, parts.toInt)
 
     // per-measurement accumulators, reset before each timed save

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Skew-join evidence runner: executes the q03/q18-shape order⋈lineitem
   * joins over SPARK_GRAFT_SF_DIR with AQE skew handling on and prints one
   * JSON line per configuration — whether OptimizeSkewedJoin ENGAGED
@@ -20,22 +18,15 @@ import org.apache.spark.sql.SparkSession
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1_skew")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skewbench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", "32"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-skewbench", sfDir)
+    val skewBytes = sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m")
+    Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> skewBytes,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> skewBytes
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
 
     val names = Seq("q03_shipping_priority", "q18_large_volume_customers")
     def run(skewOn: Boolean, allowBroadcast: Boolean): Seq[(String, Double, Boolean)] = {

@@ -34,21 +34,31 @@ object Tables {
 
   /** Volume-derived shuffle-partition count: BYTE-based and UNCAPPED —
     * partitions are bounded by size, never by count. floor(fact bytes /
-    * target), min 1, where the target is on-disk zstd-parquet bytes per
-    * partition (x~4 in memory, TableStats.ParquetExpansion). The local
+    * [[partBytes]]), min 1, where the target is on-disk zstd-parquet bytes
+    * per partition (x~4 in memory, TableStats.ParquetExpansion). The local
     * default (12 MB ≈ the measured byte equivalent of the former
-    * 1M-rows-per-partition rule on this testdata) keeps the driver's bench
+    * 1M-rows-per-partition rule on this testdata) keeps the bench
     * operating points: sf0.1 -> 1 partition (measured 1.8x faster than 8),
-    * SF1-volume -> 6, SF10-volume -> ~61. A count cap (formerly 200) is
+    * SF1-volume -> 6, SF10-volume -> 53. A count cap (formerly 200) is
     * exactly what makes partitions grow multi-GB at scale — at 100 TB the
     * byte rule instead yields more partitions of the SAME size, and the
     * per-partition SHJ/broadcast gates stay valid by construction.
     * Production target: SPARK_GRAFT_PART_BYTES=512m-class values (SCALE.md
     * has the 100 TB arithmetic); AQE coalescing absorbs the residual. */
   def volumeParts(dir: String): Int = {
-    val target = sys.env.get("SPARK_GRAFT_PART_BYTES").flatMap(_.toLongOption)
-      .getOrElse(12000000L)
+    val target = partBytes(sys.env.get("SPARK_GRAFT_PART_BYTES"))
     math.max(1L, inputBytes(dir, "lineitem") / target).toInt
+  }
+
+  /** The per-partition byte target: SPARK_GRAFT_PART_BYTES as a byte count
+    * or a k/m/g-suffixed size (`12000000`, `512m`), 12 MB when unset. An
+    * unparseable or non-positive value fails, naming the variable. */
+  def partBytes(raw: Option[String]): Long = raw.fold(12000000L) { v =>
+    val n = scala.util.Try(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v.trim)).getOrElse(0L)
+    require(n > 0, s"SPARK_GRAFT_PART_BYTES='$v': expected a positive size " +
+      "such as 12000000 or 512m")
+    n
   }
 
   /** Plan-output byte estimate with join inflation capped. Catalyst
@@ -119,7 +129,10 @@ object Tables {
     * SHUFFLE_HASH hint commits every task to: 256 MiB — a build that size
     * fits comfortably in a multi-GB executor's execution memory, while a
     * hint whose build partition overshoots it risks the §3.1 OOM (a forced
-    * SHJ cannot spill its build side the way sort-merge spills). */
+    * SHJ cannot spill its build side the way sort-merge spills). The gate
+    * judges the AVERAGE partition (table bytes / shuffle partitions); with
+    * AQE on, coalescing may merge post-shuffle partitions past that
+    * average, so one task's build can exceed the gate. */
   val ShjGateBytes: Long = 256L << 20
 
   /** Should an explicit SHUFFLE_HASH hint be placed with testdata table
@@ -130,8 +143,8 @@ object Tables {
     * size is unknown) the join is left unhinted: the planner still prefers
     * SHJ where per-partition sizes provably fit
     * (spark.sql.join.preferSortMergeJoin=false +
-    * spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold, set by the
-    * bench/server sessions), and sort-merge — which spills gracefully —
+    * spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold, set by
+    * [[GraftSession]]), and sort-merge — which spills gracefully —
     * remains the fallback. Override with spark.graft.shjGateBytes. */
   def shjSized(spark: SparkSession, dir: String, name: String): Boolean = {
     val gate = spark.conf.getOption("spark.graft.shjGateBytes")
@@ -161,8 +174,8 @@ object Tables {
   // a DataFrame strongly references its session, so every derived session
   // (CompatAudit, per-connection sessions) was retained for process
   // lifetime — a real leak in a long-lived server. The hot path is
-  // unaffected: [[prime]]'s cache (keyed (dir, table), one serving
-  // session by design) still answers bench/server reads.
+  // unaffected: [[prime]]'s cache (keyed (dir, table), one measuring
+  // session by design) still answers the primed mains' reads.
   def df(spark: SparkSession, dir: String, name: String): DataFrame =
     primed.getOrElse((dir, name), load(spark, dir, name))
 
@@ -288,8 +301,9 @@ object Tables {
   /** Pin all tables in the in-memory columnar cache, fact tables
     * repartitioned by join key (parallel cached scans; the driver data is
     * one parquet file per table = single-partition cold scans otherwise).
-    * The long-running server calls this once at boot; queries then hit the
-    * cache transparently via [[df]]. */
+    * Bench, Profile and Explain call this once after building their
+    * session; queries then hit the cache transparently via [[df]]. The
+    * wire server does not prime: it reads parquet on every query. */
   def prime(spark: SparkSession, dir: String, parts: Int): Unit = synchronized {
     import org.apache.spark.storage.StorageLevel
     // Eviction policy for a dir the heap cannot hold: MEMORY_ONLY is the

@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Standalone server entry point: boots a session, registers the tables and
-  * pg-compat layer, and serves the PG wire protocol until killed.
+/** Standalone server entry point: boots a session under the bench's policy
+  * ([[GraftSession]]), registers the tables and pg-compat layer, and serves
+  * the PG wire protocol until killed.
   * Usage: graft.ServeMain [port] [sfDir]
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(54321)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-server", sfDir)
     Tables.registerAll(spark, sfDir)
     val store = new Store(spark,
       sys.env.getOrElse("GRAFT_WAREHOUSE",

@@ -402,11 +402,15 @@ class FollowerIngestSpec extends SparkSpecBase {
           .getBytes("UTF-8"))
       val done = java.nio.file.Paths.get(wh, "_inbox", s"$id.done.json")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!java.nio.file.Files.exists(done) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(java.nio.file.Files.exists(done),
-        "the periodic sweep never executed the forwarded statement")
-      val txt = new String(java.nio.file.Files.readAllBytes(done), "UTF-8")
+      // the ack is created, then written: poll until the JSON is whole, not
+      // merely until the file exists (an early read saw it empty)
+      def ack(): String = scala.util.Try(
+        new String(java.nio.file.Files.readAllBytes(done), "UTF-8")).getOrElse("")
+      var txt = ack()
+      while (!txt.endsWith("}") && System.nanoTime() < deadline) {
+        Thread.sleep(50); txt = ack()
+      }
+      assert(txt.nonEmpty, "the periodic sweep never executed the forwarded statement")
       assert(txt.contains(""""ok":true""") && txt.contains("UPDATE 1"), txt)
       assert(st.read("sg_t").head.getString(1) == "swept")
     }

@@ -63,4 +63,14 @@ class TablesSpec extends SparkSpecBase {
       s"dead sessions must collect out of the weak map: " +
         s"${Tables.sessionCacheSize} retained > $base baseline")
   }
+
+  test("SPARK_GRAFT_PART_BYTES: byte counts and k/m/g sizes parse; bad values fail naming it") {
+    assert(Tables.partBytes(None) == 12000000L)
+    assert(Tables.partBytes(Some("12000000")) == 12000000L)
+    assert(Tables.partBytes(Some("512m")) == (512L << 20))
+    Seq("0", "abc").foreach { v =>
+      val e = intercept[IllegalArgumentException](Tables.partBytes(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PART_BYTES"), e.getMessage)
+    }
+  }
 }
