@@ -173,7 +173,8 @@ object CompatAudit {
   /** Execution + parity counters from one full corpus replay. */
   case class AuditResult(total: Int, executed: Int, failures: Seq[(String, String)],
       descOk: Int, descTot: Int, oidOk: Int, oidTot: Int,
-      valOk: Int, valTot: Int, diffs: Seq[(String, String)])
+      valOk: Int, valTot: Int, diffs: Seq[(String, String)],
+      protocolDiffs: Seq[(String, String)] = Nil)
 
   /** Replay the golden corpus on `spark`, comparing column names and
     * single-row values against the reference's own test assertions. Sets the
@@ -265,7 +266,7 @@ object CompatAudit {
                 valTot += 1
                 val got = df.schema.fields.indices.map { i =>
                   if (rows(0).isNullAt(i)) ""
-                  else wire.textEncodeField(rows(0), i, df.schema.fields(i))
+                  else PgText.textEncodeField(rows(0), i, df.schema.fields(i))
                 }
                 if (got == vals) valOk += 1
                 else valueMiss += q -> s"vals: got $got want $vals"
@@ -290,7 +291,11 @@ object CompatAudit {
     * the wire — RowDescription field names + type OIDs, DataRow text values
     * (NULL = length -1 → ""). Same expected triples and same comparison
     * semantics as [[runAudit]]; the difference is that the encoder, the
-    * message framing, and the session plumbing are all inside the loop. */
+    * message framing, and the session plumbing are all inside the loop.
+    * Each query is then sent again on the same connection over the
+    * extended protocol (Parse/Bind/Describe(portal)/Execute/Sync, a JDBC
+    * executeQuery), and any difference from the simple answer — error,
+    * names, OIDs or rows — lands in `protocolDiffs`. */
   def runSocketAudit(spark: SparkSession, store: Store,
       path: String = "tools/golden_queries.json"): AuditResult = {
     import java.io.{DataInputStream, DataOutputStream}
@@ -317,10 +322,21 @@ object CompatAudit {
       }
       msgs.result()
     }
+    def frame(tpe: Char, body: Array[Byte]): Unit = {
+      out.writeByte(tpe); out.writeInt(4 + body.length); out.write(body)
+    }
+    def cstr(v: String): Array[Byte] = v.getBytes(UTF_8) :+ 0.toByte
     def send(sql: String): Seq[(Char, Array[Byte])] = {
-      val b = sql.getBytes(UTF_8)
-      out.writeByte('Q'); out.writeInt(4 + b.length + 1)
-      out.write(b); out.writeByte(0); out.flush()
+      frame('Q', cstr(sql)); out.flush()
+      drainUntilReady()
+    }
+    def sendExtended(sql: String): Seq[(Char, Array[Byte])] = {
+      frame('P', cstr("") ++ cstr(sql) ++ Array[Byte](0, 0)) // no param OIDs
+      // unnamed portal: no param formats, no params, no result formats
+      frame('B', cstr("") ++ cstr("") ++ Array.fill[Byte](6)(0))
+      frame('D', 'P'.toByte +: cstr(""))
+      frame('E', cstr("") ++ Array.fill[Byte](4)(0)) // no row limit
+      frame('S', Array.emptyByteArray); out.flush()
       drainUntilReady()
     }
     def rowDescription(body: Array[Byte]): (Seq[String], Seq[Int]) = {
@@ -353,6 +369,12 @@ object CompatAudit {
     var valOk = 0; var valTot = 0
     val failures = Seq.newBuilder[(String, String)]
     val valueMiss = Seq.newBuilder[(String, String)]
+    val protocolMiss = Seq.newBuilder[(String, String)]
+    // what a client reads off one answer: failed?, columns, rows (as a
+    // multiset: without ORDER BY a fat result drains in task order)
+    def answer(msgs: Seq[(Char, Array[Byte])]) =
+      (msgs.exists(_._1 == 'E'), msgs.find(_._1 == 'T').map(m => rowDescription(m._2)),
+        msgs.filter(_._1 == 'D').map(m => dataRow(m._2)).sortBy(_.mkString("\u0000")))
     try {
       // startup as the configured reference-test identity
       val params = "user\u0000user\u0000database\u0000bemidb\u0000\u0000".getBytes(UTF_8)
@@ -362,6 +384,9 @@ object CompatAudit {
       require(!hello.exists(_._1 == 'E'), "startup rejected")
       queries.foreach { q =>
         val msgs = send(q)
+        val (simple, extended) = (answer(msgs), answer(sendExtended(q)))
+        if (extended != simple)
+          protocolMiss += q -> s"extended: got $extended want $simple"
         msgs.find(_._1 == 'E') match {
           case Some((_, body)) =>
             failures += q -> new String(body, UTF_8).replace('\u0000', ' ').take(160)
@@ -399,7 +424,7 @@ object CompatAudit {
       server.stop()
     }
     AuditResult(queries.size, ok, failures.result(), descOk, descTot,
-      oidOk, oidTot, valOk, valTot, valueMiss.result())
+      oidOk, oidTot, valOk, valTot, valueMiss.result(), protocolMiss.result())
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField, StructType}
 
 /** Postgres-dialect front end (SURVEY §2.A statement surface + §2.B
   * rewrites; reference: /root/reference/src/server/query_remapper.go:107-188
@@ -99,12 +99,10 @@ object PgDialect {
 
   /** Catalog refresh trigger (query_remapper_table.go:46-62,136-250): a
     * statement touching the live-DDL-reflecting catalog relations sees the
-    * CURRENT table + matview population. Shared by the simple-query path
-    * AND the wire server's extended-protocol Bind path — pgjdbc issues
-    * every query (including DatabaseMetaData's) through Parse/Bind, so a
-    * trigger only on the simple path would serve JDBC clients a stale
-    * catalog. Takes the statement UPPERCASED (callers usually have it). */
-  def maybeRefreshCatalog(spark: SparkSession, store: Store, upper: String): Unit = {
+    * CURRENT table + matview population. A step of [[planRead]], so JDBC's
+    * Parse/Bind metadata queries refresh exactly like simple Query. Takes
+    * the statement UPPERCASED. */
+  private def maybeRefreshCatalog(spark: SparkSession, store: Store, upper: String): Unit = {
     if (upper.contains("PG_MATVIEWS") || upper.contains("PG_STAT_USER_TABLES")
         || upper.contains("PG_STAT_STATEMENTS")
         || upper.contains("GRAFT_INDEX_STATS")
@@ -121,7 +119,7 @@ object PgDialect {
 
   /** [[translateSelect]] behind the text cache (LRU — a hot statement
     * survives eviction pressure from a churn of one-off statements). */
-  def translateSelectCached(sql: String): String =
+  private def translateSelectCached(sql: String): String =
     translationCache.computeIfAbsent(
       translationSettingsKey + "\n" + sql)(translateSelect(sql))
 
@@ -148,7 +146,7 @@ object PgDialect {
     * proceeds through the normal translate/plan path. A non-store
     * relation in either clause errors (snapshots only exist for
     * versioned store tables). */
-  private[graft] def rewriteTimeTravel(store: Store, stmt: String,
+  private def rewriteTimeTravel(store: Store, stmt: String,
       txn: PgTxn = null): String =
     rewriteTableChanges(store, txn, travelRe.replaceAllIn(stmt, m => {
       val tbl = unquoteName(m.group(2))
@@ -233,7 +231,7 @@ object PgDialect {
     * version. No-op (and zero-cost) outside a transaction or when neither
     * applies. Runs AFTER the plan cache: the cached frame is the shared-
     * current plan, the rebind is a cheap per-execution tree walk. */
-  private[graft] def bindTxnReads(spark: SparkSession, store: Store,
+  private def bindTxnReads(spark: SparkSession, store: Store,
       txn: PgTxn, df: DataFrame): DataFrame = {
     if (txn == null || !txn.inTxn) return df
     val staged = txn.stagedReadDirs(store)
@@ -389,9 +387,8 @@ object PgDialect {
     * catalog state, which is part of the plan-cache key via catalogEpoch.
     * `allowAutoRefresh` gates the SET graft.rollup_auto_refresh = on
     * stale-view refresh (false on paths that must not mutate, e.g.
-    * Describe). Shared by the simple-protocol execute and the extended
-    * protocol's Bind/Describe. */
-  def planWithRollup(spark: SparkSession, store: Store, translated: String,
+    * Describe). */
+  private def planWithRollup(spark: SparkSession, store: Store, translated: String,
       allowAutoRefresh: Boolean = true, txn: PgTxn = null): DataFrame = {
     // Inside a snapshot-pinned or write-staging txn the rewrite must NOT
     // fire: it would swap the base-table aggregate for a matview scan
@@ -414,6 +411,44 @@ object PgDialect {
     txn != null && txn.inTxn &&
       (txn.readSnapshot(store).exists(_.nonEmpty) ||
         txn.stagedReadDirs(store).nonEmpty)
+
+  /** The one read path: SELECT-shaped `text` to the DataFrame that simple
+    * Query, Bind, DECLARE, EXPLAIN and COPY-out all run. In order: the
+    * live-catalog refresh, time travel, cached translation, the
+    * permissions comment, the rollup rewrite behind the plan cache, the
+    * transaction rebind and JSON re-tagging. `mutate = false` (Describe,
+    * EXPLAIN) skips the steps that change state: the catalog refresh and
+    * the rollup auto-refresh. */
+  def planRead(spark: SparkSession, store: Store, text: String, txn: PgTxn,
+      mutate: Boolean, perms: Option[Map[String, Seq[String]]]): DataFrame = {
+    val sql = stripComments(text).trim
+    if (mutate) maybeRefreshCatalog(spark, store, sql.toUpperCase)
+    val translated = applyPermissions(
+      translateSelectCached(rewriteTimeTravel(store, sql, txn)), perms)
+    // the txn snapshot rebind runs on the ANALYZED plan, after the plan
+    // cache: staged own-writes + repeatable-read pins (incl. through
+    // views) resolve here
+    retagJson(bindTxnReads(spark, store, txn, planWithRollup(spark, store,
+      translated, allowAutoRefresh = mutate, txn = txn)))
+  }
+
+  private val readVerbs = Set("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN", "SHOW")
+  private def leadVerb(sql: String): String =
+    stripComments(sql).trim.split("\\s+|\\(", 2)(0).toUpperCase
+
+  /** Does `text` return rows without writing? Its verb is read after the
+    * comments are stripped, so a `-- note` prefix does not hide a SELECT. */
+  def isRead(text: String): Boolean = readVerbs(leadVerb(text))
+
+  /** The row shape Describe(statement) reports for a read: planned through
+    * [[planRead]] with no transaction and no state change, never run. */
+  def describeRead(spark: SparkSession, store: Store, text: String): StructType =
+    leadVerb(text) match {
+      case "EXPLAIN" => StructType(Seq(StructField("QUERY PLAN", StringType)))
+      case "SHOW" => executeShow(spark, stripComments(text).trim).df.schema
+      case _ => planRead(spark, store, text, null, mutate = false,
+        parsePermissions(text)).schema
+    }
 
   /** Column names of a session-resolvable relation (empty when absent) —
     * the rollup rewriter's qualified-reference validator. */
@@ -1131,16 +1166,8 @@ object PgDialect {
       return Rows(Seq(Option.empty[String]).toDF("pg_stat_statements_reset"), "SELECT")
     }
     if (upper.startsWith("SELECT") || upper.startsWith("WITH") ||
-        upper.startsWith("VALUES") || upper.startsWith("TABLE ")) {
-      maybeRefreshCatalog(spark, store, upper)
-      val traveled = rewriteTimeTravel(store, stmt, txn)
-      val translated = applyPermissions(translateSelectCached(traveled), perms)
-      // the txn snapshot rebind runs on the ANALYZED plan, after the plan
-      // cache: staged own-writes + repeatable-read pins (incl. through
-      // views) resolve here
-      return Rows(retagJson(bindTxnReads(spark, store, txn,
-        planWithRollup(spark, store, translated, txn = txn))), "SELECT")
-    }
+        upper.startsWith("VALUES") || upper.startsWith("TABLE "))
+      return Rows(planRead(spark, store, stmt, txn, mutate = true, perms), "SELECT")
     // EXPLAIN [ANALYZE|VERBOSE|(opts)] SELECT … -> Spark's formatted plan as
     // PG-style "QUERY PLAN" text rows (the reference delegates to DuckDB's
     // EXPLAIN; here Catalyst's plan IS the engine plan)
@@ -1151,14 +1178,8 @@ object PgDialect {
         val analyze =
           "(?is)EXPLAIN\\s+(?:ANALYZE\\b|\\([^)]*\\bANALYZE\\b[^)]*\\))".r
             .findFirstIn(stmt).isDefined
-        // the plan a SELECT would actually run — time travel + rollup
-        // rewrite included (no auto-refresh: EXPLAIN must not mutate)
-        val explainSql = applyPermissions(
-          translateSelect(rewriteTimeTravel(store, inner.trim, txn)), perms)
-        val df = bindTxnReads(spark, store, txn,
-          if (txnSnapshotBound(store, txn)) spark.sql(explainSql)
-          else spark.sql(RollupRewrite(store, explainSql,
-            columnsOf = relationColumns(spark)).getOrElse(explainSql)))
+        // the plan a SELECT would actually run (EXPLAIN must not mutate)
+        val df = planRead(spark, store, inner, txn, mutate = false, perms)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         val lines =
@@ -1191,8 +1212,7 @@ object PgDialect {
           else s"SELECT ${cols.getOrElse("*")} FROM $src"
         // pg_dump's parallel data phase reads through here: the adopted
         // snapshot must pin the COPY source like any SELECT
-        val df = bindTxnReads(spark, store, txn, spark.sql(applyPermissions(
-          translateSelect(rewriteTimeTravel(store, inner, txn)), perms)))
+        val df = planRead(spark, store, inner, txn, mutate = true, perms)
         val o = opts.toUpperCase
         return CopyOut(df, csv = o.contains("CSV"), header = o.contains("HEADER"))
       case _ =>
@@ -1314,7 +1334,7 @@ object PgDialect {
     }
   }
 
-  private def executeShow(spark: SparkSession, stmt: String): PgResult = {
+  private def executeShow(spark: SparkSession, stmt: String): Rows = {
     import spark.implicits._
     val rest = stmt.split("\\s+").drop(1).map(_.toLowerCase.stripSuffix(";"))
     val name = rest.toSeq match {
@@ -3109,8 +3129,28 @@ object PgDialect {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  private def stripComments(sql: String): String =
-    sql.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("--[^\n]*", " ")
+  /** Comments become one space each; text inside single quotes (a `''`
+    * escape re-enters at once) and double quotes is kept, so a comment
+    * marker in a literal or identifier is text. */
+  private def stripComments(sql: String): String = {
+    val sb = new StringBuilder(sql.length)
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (c == '\'' || c == '"') {
+        val close = sql.indexOf(c, i + 1)
+        val end = if (close < 0) sql.length else close + 1
+        sb.append(sql.substring(i, end)); i = end
+      } else if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        sb.append(' '); i = if (nl < 0) sql.length else nl
+      } else if (sql.startsWith("/*", i)) {
+        val close = sql.indexOf("*/", i + 2)
+        sb.append(' '); i = if (close < 0) sql.length else close + 2
+      } else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
 
   /** Expression-fragment translation for the DML surface (SET values,
     * WHERE predicates, VALUES rows, MERGE conditions): the PG-isms that

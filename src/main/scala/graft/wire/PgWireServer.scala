@@ -8,18 +8,18 @@ import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 
-/** Postgres v3 wire protocol server, simple-query flavor (SURVEY §3.1;
-  * reference: /root/reference/src/server/postgres_server.go:74-247 +
-  * response_handler.go). One thread per connection, shared SparkSession —
-  * the same concurrency shape as the reference (goroutine per connection,
-  * singleton engine).
+/** Postgres v3 wire protocol server (SURVEY §3.1; reference:
+  * src/server/postgres_server.go:74-247 + response_handler.go). One thread
+  * per connection, shared SparkSession — the same concurrency shape as the
+  * reference (goroutine per connection, singleton engine).
   *
-  * Round-1 scope: startup (SSL refused with 'N', AuthenticationOk,
-  * ParameterStatus, BackendKeyData), simple Query with multi-statement
-  * support, text-format encoding (bools as t/f, PG timestamp format, arrays
-  * as {a,b,c}), CommandComplete tags, ErrorResponse for unsupported
-  * statements, Terminate. Extended protocol (Parse/Bind/Describe) is the
-  * documented next increment.
+  * Startup, simple Query (multi-statement), the extended protocol
+  * (Parse/Bind/Describe/Execute/Close/Sync), cursors, SQL-level PREPARE /
+  * EXECUTE and COPY in both directions. Every read, whichever message
+  * carries it, runs the same [[PgDialect.execute]] call simple Query makes
+  * (planned by [[PgDialect.planRead]]), so psql and a JDBC client get the
+  * same names, type OIDs and values for the same text. Describe plans a
+  * read without running it and never auto-refreshes anything.
   */
 object PgWireServer {
   /** Always-accepted user, the analog of the reference's SYSTEM_AUTH_USER
@@ -191,6 +191,9 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
     // BEGIN/COMMIT/ROLLBACK are real for store-table writes here
     val txn = new PgDialect.PgTxn
     var errorSkip = false // error in extended flow: skip until Sync
+    // an extended-protocol error: reported, aborts an open transaction
+    // block exactly as a simple-Query error does, and skips to Sync
+    def failExtended(e: Throwable): Unit = { fail(out, e, txn); errorSkip = true }
 
     // one backend key per connection; queries run in this connection's job
     // group so CancelRequest can abort exactly this backend's Spark jobs
@@ -250,7 +253,7 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
                   try { val n = b.readShort(); (0 until n).map(_ => b.readInt()) }
                   catch { case _: java.io.IOException => Nil }
                 msg(out, '1') { _ => } // ParseComplete
-              } catch { case e: Throwable => sendError(out, e); errorSkip = true }
+              } catch { case e: Throwable => failExtended(e) }
             case 'B' if !errorSkip => // Bind
               try {
                 val portal = readCStr()
@@ -274,88 +277,45 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
                 val resFmts =
                   try { val n = b.readShort(); (0 until n).map(_ => b.readShort()) }
                   catch { case _: java.io.IOException => Seq.empty[Short] }
-                // SELECT-shaped statements get the cached translate+plan
-                // (through the rollup rewrite): re-executing a prepared
-                // statement with the same arguments skips translation AND
-                // analysis. Anything else (DML/DDL/SET — JDBC's
-                // executeUpdate flow) becomes a command portal whose
-                // execution defers to the Execute message.
-                val verb = sql.trim.split("\\s+|\\(", 2)(0).toUpperCase
+                // a read plans now, exactly as simple Query runs it (the
+                // plan cache makes a re-executed prepared statement skip
+                // translation and analysis); anything else (DML/DDL/SET —
+                // JDBC's executeUpdate flow) becomes a command portal
+                // whose execution defers to the Execute message
                 portals(portal) =
-                  if (verb == "SHOW") {
-                    // settings-backed SHOWs (incl. the txn-aware
-                    // transaction_isolation) answer through the dialect,
-                    // not the Spark SQL parser
-                    PgDialect.execute(spark, store, sql, txn) match {
-                      case PgDialect.Rows(df, _) =>
-                        new Portal(df, resFmts, statements(stmt))
-                      case _ =>
-                        new Portal(null, resFmts, statements(stmt), Some(sql))
-                    }
-                  }
-                  else if (Set("SELECT", "WITH", "VALUES", "TABLE",
-                    "EXPLAIN")(verb)) {
-                    // same live-catalog trigger as the simple-query path:
-                    // JDBC metadata queries arrive through Bind
-                    PgDialect.maybeRefreshCatalog(spark, store, sql.toUpperCase)
-                    new Portal(
-                      // repeatable-read pinning + staged own-writes apply
-                      // to the extended protocol too (JDBC's default path):
-                      // the txn snapshot rebind runs on the analyzed plan
-                      PgDialect.bindTxnReads(spark, store, txn,
-                        PgDialect.planWithRollup(spark, store,
-                          PgDialect.translateSelectCached(
-                            PgDialect.rewriteTimeTravel(store, sql, txn)),
-                          txn = txn)), resFmts,
-                      statements(stmt))
-                  }
+                  if (PgDialect.isRead(sql))
+                    new Portal(readFrame(sql, txn), resFmts, statements(stmt))
                   else new Portal(null, resFmts, statements(stmt), Some(sql))
                 msg(out, '2') { _ => } // BindComplete
-              } catch { case e: Throwable => sendError(out, e); errorSkip = true }
+              } catch { case e: Throwable => failExtended(e) }
             case 'D' if !errorSkip => // Describe
               try {
                 val kind = b.read().toChar
                 val name = readCStr()
-                def isCommandSql(sqlText: String): Boolean = {
-                  val verb = sqlText.trim.split("\\s+|\\(", 2)(0).toUpperCase
-                  !Set("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN", "SHOW")(verb)
-                }
-                if ((kind == 'P' && portals.get(name).exists(_.command.isDefined))
-                    || (kind == 'S' && statements.get(name).exists(isCommandSql))) {
-                  // command statement/portal: row set unknown until Execute
-                  if (kind == 'S') msg(out, 't') { bb => // ParameterDescription
-                    val n = countParams(statements(name))
+                if (kind == 'S') {
+                  val text = statements(name)
+                  val n = countParams(text)
+                  msg(out, 't') { bb => // ParameterDescription
                     val declared = declaredParamOids.getOrElse(name, Nil)
                     bb.writeShort(n)
                     (1 to n).foreach { i =>
-                      val oid =
+                      bb.writeInt(
                         if (i <= declared.size && declared(i - 1) != 0) declared(i - 1)
-                        else inferParamOid(statements(name), i)
-                      bb.writeInt(oid)
+                        else inferParamOid(text, i))
                     }
                   }
-                  msg(out, 'n') { _ => } // NoData
+                  // a read's row shape is planned, never run; a command's
+                  // row set is unknown until Execute
+                  if (PgDialect.isRead(text))
+                    rowDescription(out, PgDialect.describeRead(spark, store,
+                      substituteParams(text, Seq.fill(n)(null))))
+                  else msg(out, 'n') { _ => } // NoData
                 } else {
-                  val df = if (kind == 'P') portals(name).df
-                    else PgDialect.planWithRollup(spark, store,
-                      PgDialect.translateSelectCached(PgDialect.rewriteTimeTravel(store,
-                        substituteParams(statements(name),
-                          Seq.fill(countParams(statements(name)))(null)))),
-                      allowAutoRefresh = false) // Describe must not mutate
-                  if (kind == 'S') msg(out, 't') { bb => // ParameterDescription
-                    val n = countParams(statements(name))
-                    val declared = declaredParamOids.getOrElse(name, Nil)
-                    bb.writeShort(n)
-                    (1 to n).foreach { i =>
-                      val oid =
-                        if (i <= declared.size && declared(i - 1) != 0) declared(i - 1)
-                        else inferParamOid(statements(name), i)
-                      bb.writeInt(oid)
-                    }
-                  }
-                  rowDescription(out, df.schema)
+                  val p = portals(name)
+                  if (p.command.isDefined) msg(out, 'n') { _ => } // NoData
+                  else rowDescription(out, p.df.schema)
                 }
-              } catch { case e: Throwable => sendError(out, e); errorSkip = true }
+              } catch { case e: Throwable => failExtended(e) }
             case 'E' if !errorSkip => // Execute [maxRows]
               try {
                 val portal = readCStr()
@@ -369,22 +329,10 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
                     if (p.ranTag != null) commandComplete(out, p.ranTag)
                     else {
                       val t0 = System.nanoTime()
-                      val tag = PgDialect.execute(spark, store, cmdSql, txn) match {
-                        case PgDialect.Rows(df, rtag) =>
-                          val n = sendRows(out, df, rtag)
-                          PgDialect.noteStatement(p.query,
-                            (System.nanoTime() - t0) / 1000, n)
-                          s"$rtag $n"
-                        case PgDialect.Command(ctag) =>
-                          commandComplete(out, ctag)
-                          PgDialect.noteStatement(p.query,
-                            (System.nanoTime() - t0) / 1000, 0)
-                          ctag
-                        case PgDialect.Empty =>
-                          msg(out, 'I') { _ => }; ""
-                        case _ => throw PgDialect.UnsupportedQuery(
-                          "COPY is not supported in the extended protocol")
-                      }
+                      val (n, tag) = sendResult(out,
+                        PgDialect.execute(spark, store, cmdSql, txn), null, txn)
+                      if (tag.nonEmpty)
+                        PgDialect.noteStatement(p.query, (System.nanoTime() - t0) / 1000, n)
                       p.ranTag = tag
                     }
                   case None =>
@@ -422,7 +370,7 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
                       }
                     }
                 }
-              } catch { case e: Throwable => sendError(out, e); errorSkip = true }
+              } catch { case e: Throwable => failExtended(e) }
             case 'C' if !errorSkip => // Close: drop the named statement/portal
               val kind = b.read().toChar
               val name = readCStr()
@@ -438,18 +386,24 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
           }
         }
       }
-    } catch { case _: Throwable => () }
-    finally {
+    } catch {
+      // a client hanging up is no fault; anything else leaves one line
+      case _: java.io.EOFException | _: java.net.SocketException => ()
+      case e: Throwable => traceFailure(pid, e)
+    } finally {
       // PG aborts an open transaction when the client disappears: undo
       // this connection's uncommitted writes best-effort
       if (txn.inTxn)
-        try txn.rollback(store) catch { case _: Exception => () }
+        try txn.rollback(store) catch { case e: Exception => traceFailure(pid, e) }
       backends.remove(pid); sock.close()
     }
   }
 
-  /** Text params pass through; binary int4/int8/uuid decoded by length, the
-    * same heuristic the reference applies (query_handler.go:143-184). */
+  /** One stderr line for a connection-level failure no client is left to
+    * receive (the `[bench]` / `[tables]` convention). */
+  private def traceFailure(pid: Int, e: Throwable): Unit =
+    System.err.println(s"[pgwire] backend $pid: ${e.getClass.getName}: ${e.getMessage}")
+
   /** Binary-format parameter -> canonical text, steered by the OID the
     * client declared at Parse time (PgJDBC/psycopg always declare when they
     * send binary). Without a declared OID the old length heuristic stands —
@@ -692,7 +646,9 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
 
   private def readyForQuery(out: DataOutputStream,
       txn: PgDialect.PgTxn = null): Unit = {
-    val status = if (txn != null && txn.inTxn) 'T' else 'I'
+    // PG's transaction status: idle, in a block, or in a failed block
+    val status =
+      if (txn == null || !txn.inTxn) 'I' else if (txn.isAborted) 'E' else 'T'
     msg(out, 'Z') { b => b.writeByte(status) }
     out.flush()
   }
@@ -743,9 +699,8 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
     * streamed) when handled (the pg_stat_statements feed). */
   private def cursorStatement(out: DataOutputStream, stmt: String,
       cursors: scala.collection.mutable.Map[String, Portal],
-      statements: scala.collection.mutable.Map[String, String] =
-        scala.collection.mutable.Map.empty,
-      txn: PgDialect.PgTxn = null): Option[Long] = stmt.trim match {
+      statements: scala.collection.mutable.Map[String, String],
+      in: DataInputStream, txn: PgDialect.PgTxn): Option[Long] = stmt.trim match {
     case prepareRe(name, _, query) =>
       if (statements.contains(unq(name)))
         throw PgDialect.UnsupportedQuery(
@@ -768,14 +723,8 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         }
       // the connection txn rides along: EXECUTE of a prepared DML must
       // journal (ROLLBACK reverts it) and reads must honor the RR pin
-      Some(PgDialect.execute(spark, store, substituteParams(query, args), txn) match {
-        case PgDialect.Rows(df, tag) => sendRows(out, df, tag)
-        case PgDialect.CopyOut(df, csv, header) => sendCopyOut(out, df, csv, header)
-        case _: PgDialect.CopyIn => throw PgDialect.UnsupportedQuery(
-          "COPY FROM STDIN cannot run from EXECUTE")
-        case PgDialect.Command(tag) => commandComplete(out, tag); 0L
-        case PgDialect.Empty => msg(out, 'I') { _ => }; 0L
-      })
+      Some(sendResult(out,
+        PgDialect.execute(spark, store, substituteParams(query, args), txn), in, txn)._1)
     case deallocRe(name) =>
       if (name.equalsIgnoreCase("ALL")) { statements.clear(); commandComplete(out, "DEALLOCATE ALL") }
       else {
@@ -785,19 +734,10 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         commandComplete(out, "DEALLOCATE")
       }
       Some(0L)
-    case _ => cursorOnlyStatement(out, stmt, cursors, txn)
-  }
-
-  private def cursorOnlyStatement(out: DataOutputStream, stmt: String,
-      cursors: scala.collection.mutable.Map[String, Portal],
-      txn: PgDialect.PgTxn = null): Option[Long] = stmt.trim match {
     case declareRe(name, query) =>
-      PgDialect.maybeRefreshCatalog(spark, store, query.toUpperCase)
-      val df = PgDialect.bindTxnReads(spark, store, txn,
-        PgDialect.planWithRollup(spark, store,
-          PgDialect.translateSelectCached(
-            PgDialect.rewriteTimeTravel(store, query, txn)), txn = txn))
-      cursors(unq(name)) = new Portal(df)
+      if (!PgDialect.isRead(query))
+        throw PgDialect.UnsupportedQuery("DECLARE CURSOR can only be used with a query")
+      cursors(unq(name)) = new Portal(readFrame(query, txn))
       commandComplete(out, "DECLARE CURSOR")
       Some(0L)
     case fetchRe(verb, count, name) =>
@@ -827,12 +767,9 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
   }
 
   private def runQuery(out: DataOutputStream, sql: String,
-      cursors: scala.collection.mutable.Map[String, Portal] =
-        scala.collection.mutable.Map.empty,
-      statements: scala.collection.mutable.Map[String, String] =
-        scala.collection.mutable.Map.empty,
-      in: DataInputStream = null,
-      txn: PgDialect.PgTxn = null): Unit =
+      cursors: scala.collection.mutable.Map[String, Portal],
+      statements: scala.collection.mutable.Map[String, String],
+      in: DataInputStream, txn: PgDialect.PgTxn): Unit =
     try {
       val stmts = PgDialect.splitStatements(sql)
       if (stmts.isEmpty) msg(out, 'I') { _ => } // EmptyQueryResponse
@@ -840,52 +777,8 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         // pg_stat_statements feed: time-to-last-row as the client saw it
         val t0 = System.nanoTime()
         val rows = withStatementTimeout {
-          cursorStatement(out, stmt, cursors, statements, txn).getOrElse {
-          PgDialect.execute(spark, store, stmt, txn) match {
-            case PgDialect.Rows(df, tag) => sendRows(out, df, tag)
-            case PgDialect.CopyOut(df, csv, header) =>
-              sendCopyOut(out, df, csv, header)
-            case ci: PgDialect.CopyIn =>
-              if (in == null) throw PgDialect.UnsupportedQuery(
-                "COPY FROM STDIN requires the simple protocol")
-              // inside an explicit txn the ingested chunks must roll back
-              // with it, like any other write — journal the appends the
-              // same way the dialect journals PgDml statements
-              val journaling = txn != null && txn.inTxn
-              // pin BEFORE the write — a COPY-first RR txn needs the
-              // baseline for first-updater-wins (see the DML path)
-              if (journaling && txn.isRepeatable) txn.readSnapshot(store)
-              if (journaling) store.beginWriteJournal()
-              var copied = -1L
-              var written: Seq[(String, Int, Int)] = Nil
-              // chunk appends STAGE in the txn's private version dirs —
-              // invisible to other connections until COMMIT, discarded
-              // wholesale at ROLLBACK (same contract as the DML path)
-              try copied =
-                if (journaling)
-                  store.withStaging(txn.stagingFor(store))(
-                    receiveCopyIn(in, out, ci))
-                else receiveCopyIn(in, out, ci)
-              finally if (journaling) {
-                // drain in the FINALLY: a COPY that dies in a later 64MB
-                // chunk (malformed row, CopyFail) has already published
-                // the earlier chunk appends — they must be noted into the
-                // txn so ROLLBACK can revert them, not silently dropped.
-                // "after" derives from the journal (each publish = its
-                // before+1), never a live re-read (see checkWriteConflicts)
-                written = PgDialect.noteJournaledWrites(store, txn)
-              }
-              // first-updater-wins BEFORE CommandComplete: a conflicting
-              // COPY must never report success then error — per-table
-              // coalescing keeps a multi-chunk COPY's own sequential
-              // publishes from reading as conflicts
-              PgDialect.checkWriteConflicts(txn, journaling, written)
-              commandComplete(out, s"COPY $copied")
-              copied
-            case PgDialect.Command(tag) => commandComplete(out, tag); 0L
-            case PgDialect.Empty => msg(out, 'I') { _ => }; 0L
-          }
-        }
+          cursorStatement(out, stmt, cursors, statements, in, txn).getOrElse(
+            sendResult(out, PgDialect.execute(spark, store, stmt, txn), in, txn)._1)
         }
         PgDialect.noteStatement(stmt, (System.nanoTime() - t0) / 1000, rows)
       }
@@ -897,12 +790,73 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         SessionSettings.get("timezone").foreach { tz =>
           msg(out, 'S') { b => cstr(b, "TimeZone"); cstr(b, tz) }
         }
-    } catch { case e: Throwable =>
-      // PG: an error inside a transaction block aborts it — everything
-      // until ROLLBACK is then refused with 25P02
-      if (txn != null) txn.markFailed()
-      sendError(out, e)
+    } catch { case e: Throwable => fail(out, e, txn) }
+
+  /** The rows of a read ([[PgDialect.isRead]]) from the same
+    * [[PgDialect.execute]] call simple Query makes. */
+  private def readFrame(sql: String, txn: PgDialect.PgTxn): DataFrame =
+    PgDialect.execute(spark, store, sql, txn) match {
+      case PgDialect.Rows(df, _) => df
+      case _ => throw PgDialect.UnsupportedQuery(s"expected a row-returning query: $sql")
     }
+
+  /** Send one statement's result in its protocol shape. Returns the rows
+    * streamed (the pg_stat_statements feed) and the CommandComplete tag
+    * sent ("" for an empty query). `in` is null off the simple protocol,
+    * where COPY FROM STDIN cannot run. */
+  private def sendResult(out: DataOutputStream, result: PgDialect.PgResult,
+      in: DataInputStream, txn: PgDialect.PgTxn): (Long, String) = result match {
+    case PgDialect.Rows(df, tag) =>
+      rowDescription(out, df.schema)
+      // DML … RETURNING keeps its own CommandComplete verb (PG: "UPDATE n");
+      // every other Rows result completes as a SELECT
+      val verb =
+        if (Seq("INSERT", "UPDATE", "DELETE").exists(tag.startsWith)) tag else "SELECT"
+      val n = sendDataRowsBody(out, df)
+      commandComplete(out, s"$verb $n")
+      (n, s"$verb $n")
+    case PgDialect.CopyOut(df, csv, header) =>
+      val n = sendCopyOut(out, df, csv, header)
+      (n, s"COPY $n")
+    case ci: PgDialect.CopyIn =>
+      if (in == null) throw PgDialect.UnsupportedQuery(
+        "COPY FROM STDIN requires the simple protocol")
+      // inside an explicit txn the ingested chunks must roll back with it,
+      // like any other write — journal the appends the same way the
+      // dialect journals PgDml statements
+      val journaling = txn.inTxn
+      // pin BEFORE the write — a COPY-first RR txn needs the baseline for
+      // first-updater-wins (see the DML path)
+      if (journaling && txn.isRepeatable) txn.readSnapshot(store)
+      if (journaling) store.beginWriteJournal()
+      var copied = -1L
+      var written: Seq[(String, Int, Int)] = Nil
+      // chunk appends STAGE in the txn's private version dirs — invisible
+      // to other connections until COMMIT, discarded wholesale at ROLLBACK
+      // (same contract as the DML path)
+      try copied =
+        if (journaling)
+          store.withStaging(txn.stagingFor(store))(receiveCopyIn(in, out, ci))
+        else receiveCopyIn(in, out, ci)
+      finally if (journaling) {
+        // drain in the FINALLY: a COPY that dies in a later 64MB chunk
+        // (malformed row, CopyFail) has already published the earlier
+        // chunk appends — they must be noted into the txn so ROLLBACK can
+        // revert them, not silently dropped. "after" derives from the
+        // journal (each publish = its before+1), never a live re-read
+        // (see checkWriteConflicts)
+        written = PgDialect.noteJournaledWrites(store, txn)
+      }
+      // first-updater-wins BEFORE CommandComplete: a conflicting COPY must
+      // never report success then error — per-table coalescing keeps a
+      // multi-chunk COPY's own sequential publishes from reading as
+      // conflicts
+      PgDialect.checkWriteConflicts(txn, journaling, written)
+      commandComplete(out, s"COPY $copied")
+      (copied, s"COPY $copied")
+    case PgDialect.Command(tag) => commandComplete(out, tag); (0L, tag)
+    case PgDialect.Empty => msg(out, 'I') { _ => }; (0L, "")
+  }
 
   /** Map Spark error conditions to the SQLSTATEs PG clients branch on
     * (42P01 undefined_table, 42703 undefined_column; reference returns
@@ -977,6 +931,13 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
     }
   }
 
+  /** Report a failed statement. PG: an error inside a transaction block
+    * aborts it — everything until ROLLBACK is then refused with 25P02. */
+  private def fail(out: DataOutputStream, e: Throwable, txn: PgDialect.PgTxn): Unit = {
+    txn.markFailed()
+    sendError(out, e)
+  }
+
   private def sendError(out: DataOutputStream, e: Throwable): Unit =
     msg(out, 'E') { b =>
       b.writeByte('S'); cstr(b, "ERROR")
@@ -986,19 +947,6 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         else Option(e.getMessage).getOrElse(e.toString).take(500))
       b.writeByte(0)
     }
-
-  /** Returns the number of rows streamed (pg_stat_statements feed). */
-  private def sendRows(out: DataOutputStream, df: DataFrame,
-      tag: String = "SELECT"): Long = {
-    rowDescription(out, df.schema)
-    // DML … RETURNING keeps its own CommandComplete verb (PG: "UPDATE n");
-    // every other Rows result completes as a SELECT
-    val prefix =
-      if (tag.startsWith("INSERT") || tag.startsWith("UPDATE") ||
-        tag.startsWith("DELETE")) tag
-      else "SELECT"
-    sendDataRows(out, df, prefix)
-  }
 
   private def rowDescription(out: DataOutputStream, schema: StructType): Unit =
     msg(out, 'T') { b => // RowDescription
@@ -1450,7 +1398,7 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
         if (row.isNullAt(i)) b.writeInt(-1)
         else if (fmt(i) == 1) binaryEncode(b, row, i, f.dataType)
         else {
-          val bytes = textEncodeField(row, i, f).getBytes(UTF_8)
+          val bytes = PgText.textEncodeField(row, i, f).getBytes(UTF_8)
           b.writeInt(bytes.length); b.write(bytes)
         }
       }
@@ -1481,7 +1429,7 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
       val payload = numericBinary(row.getDecimal(i))
       b.writeInt(payload.length); b.write(payload)
     case other => // not binary-encodable: text payload
-      val bytes = textEncode(row, i, other).getBytes(UTF_8)
+      val bytes = PgText.textEncode(row, i, other).getBytes(UTF_8)
       b.writeInt(bytes.length); b.write(bytes)
   }
 
@@ -1517,14 +1465,6 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
     out.array()
   }
 
-  private def sendDataRows(out: DataOutputStream, df: DataFrame,
-      tagPrefix: String = "SELECT"): Long = {
-    val schema = df.schema
-    val n = sendDataRowsBody(out, df)
-    commandComplete(out, s"$tagPrefix $n")
-    n
-  }
-
   /** DataRow stream for a FULL drain (no portal row limit): fat results
     * encode on executor tasks through the COPY chunk pump (the pre-r12
     * per-row toLocalIterator funnel capped any BI tool or `psql -c
@@ -1549,16 +1489,6 @@ class PgWireServer(spark: SparkSession, store: Store, port: Int,
       n
     }
   }
-
-  // text-format value encoding lives in [[PgText]] (a serializable object,
-  // so COPY TO STDOUT encodes on executors); thin delegates keep the
-  // server-local call sites and CompatAudit's accessor stable
-  private[graft] def textEncodeField(row: Row, i: Int, f: StructField): String =
-    PgText.textEncodeField(row, i, f)
-  private[graft] def textEncode(row: Row, i: Int, dt: DataType): String =
-    PgText.textEncode(row, i, dt)
-  private[graft] def goFloat(d: Double): String = PgText.goFloat(d)
-  private[graft] def goFloatF(f: Float): String = PgText.goFloatF(f)
 
   private def commandComplete(out: DataOutputStream, tag: String): Unit =
     msg(out, 'C') { b => cstr(b, tag) }

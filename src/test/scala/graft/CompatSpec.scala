@@ -34,7 +34,8 @@ class CompatSpec extends SparkSpecBase {
   test("golden corpus: 271/271 over a real socket — names, OIDs, wire values") {
     // the full corpus through the v3 simple protocol: what's compared is
     // the actual bytes in RowDescription / DataRow, so the encoder, message
-    // framing, and per-connection session plumbing are all inside the loop
+    // framing, and per-connection session plumbing are all inside the loop;
+    // each query's extended-protocol replay must answer identically
     val s = spark.newSession()
     val store = new Store(s,
       java.nio.file.Files.createTempDirectory("graft-compat-sock").toString)
@@ -49,5 +50,7 @@ class CompatSpec extends SparkSpecBase {
       r.diffs.filter(_._2.startsWith("oids")).take(5).mkString("\n"))
     assert(r.valTot > 0 && r.valOk == r.valTot,
       r.diffs.filter(_._2.startsWith("vals")).take(5).mkString("\n"))
+    assert(r.protocolDiffs.isEmpty, s"${r.protocolDiffs.size} differ over the " +
+      "extended protocol:\n" + r.protocolDiffs.take(5).mkString("\n"))
   }
 }

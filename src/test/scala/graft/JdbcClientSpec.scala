@@ -106,6 +106,12 @@ class JdbcClientSpec extends SparkSpecBase {
       sync()
     }
 
+    /** psql's path for the same text: one simple Query message. */
+    def simpleQuery(sql: String): Seq[(Char, Array[Byte])] = {
+      send('Q', cstr(sql)); out.flush()
+      drainUntilReady()
+    }
+
     def close(): Unit = {
       out.writeByte('X'); out.writeInt(4); out.flush(); sock.close()
     }
@@ -126,7 +132,11 @@ class JdbcClientSpec extends SparkSpecBase {
     msgs.filter(_._1 == 'C').map(m =>
       new String(m._2, 0, m._2.length - 1, UTF_8))
 
-  private def colNames(msgs: Seq[(Char, Array[Byte])]): Seq[String] = {
+  private def colNames(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
+    columns(msgs).map(_._1)
+
+  /** RowDescription's (name, type OID) pairs. */
+  private def columns(msgs: Seq[(Char, Array[Byte])]): Seq[(String, Int)] = {
     val t = msgs.find(_._1 == 'T').get._2
     val in = new DataInputStream(new java.io.ByteArrayInputStream(t))
     val n = in.readShort()
@@ -134,10 +144,19 @@ class JdbcClientSpec extends SparkSpecBase {
       val name = new StringBuilder
       var b = in.read()
       while (b != 0) { name.append(b.toChar); b = in.read() }
-      in.skipBytes(18) // table oid(4) attnum(2) type oid(4) len(2) mod(4) fmt(2)
-      name.toString
+      in.skipBytes(6) // table oid(4) attnum(2)
+      val oid = in.readInt()
+      in.skipBytes(8) // len(2) mod(4) fmt(2)
+      (name.toString, oid)
     }
   }
+
+  /** SQLSTATEs of the ErrorResponses in `msgs`. */
+  private def errorCodes(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
+    msgs.filter(_._1 == 'E').map { m =>
+      new String(m._2, UTF_8).split('\u0000').find(_.startsWith("C"))
+        .map(_.drop(1)).getOrElse("")
+    }
 
   private lazy val store =
     new Store(spark, java.nio.file.Files.createTempDirectory("graft-jdbc").toString)
@@ -372,6 +391,69 @@ class JdbcClientSpec extends SparkSpecBase {
         again.find(_.apply(2) == "jdbc_meta_t").toString)
       c.close()
     } finally store.drop("jdbc_meta_t")
+  }
+
+  test("a trailing permissions comment is enforced over Bind as over Query") {
+    val c = new Jdbc(port); c.connect()
+    // sqlcommenter-style: the comment trails the statement
+    val sql = "SELECT n_nationkey FROM nation " +
+      """/*BEMIDB_PERMISSIONS {"public.nation": ["n_name"]} BEMIDB_PERMISSIONS*/"""
+    val simple = c.simpleQuery(sql)
+    assert(errorCodes(simple).nonEmpty && rows(simple).isEmpty, simple.map(_._1))
+    val extended = c.executeQuery(sql)
+    assert(errorCodes(extended).nonEmpty && rows(extended).isEmpty,
+      s"the denied column came back over Bind: ${rows(extended).take(3)}")
+    // the permitted column still reads over both
+    val allowed = sql.replace("n_nationkey", "n_name")
+    assert(rows(c.simpleQuery(allowed)).size == 25)
+    assert(rows(c.executeQuery(allowed)).size == 25)
+    c.close()
+  }
+
+  test("Describe(statement) of a comment-prefixed SELECT returns its row shape") {
+    val c = new Jdbc(port); c.connect()
+    // Metabase-style leading comment
+    c.parse("S_note", "-- note\nSELECT n_name FROM nation")
+    c.describeStatement("S_note")
+    val meta = c.sync()
+    assert(!meta.map(_._1).contains('n'), "a SELECT is not NoData")
+    assert(colNames(meta) == Seq("n_name"))
+    c.close()
+  }
+
+  test("comment markers inside quotes are text over both protocols") {
+    val c = new Jdbc(port); c.connect()
+    val sql = """SELECT 'a--b' AS "x--y", '/*c*/' AS z -- trailing note"""
+    for (msgs <- Seq(c.simpleQuery(sql), c.executeQuery(sql))) {
+      assert(errorCodes(msgs).isEmpty, msgs.map(m => new String(m._2, UTF_8)))
+      assert(colNames(msgs) == Seq("x--y", "z"))
+      assert(rows(msgs) == Seq(Seq("a--b", "/*c*/")))
+    }
+    c.close()
+  }
+
+  test("a failing Bind inside BEGIN aborts the transaction until ROLLBACK") {
+    val c = new Jdbc(port); c.connect()
+    assert(tags(c.executeQuery("BEGIN")) == Seq("BEGIN"))
+    val bad = c.executeQuery("SELECT no_such_column FROM nation")
+    assert(errorCodes(bad).nonEmpty)
+    assert(bad.last._2.head == 'E'.toByte, "ReadyForQuery(failed txn)")
+    // every later statement is refused with 25P02, over both protocols
+    assert(errorCodes(c.executeQuery("SELECT 1")) == Seq("25P02"))
+    assert(errorCodes(c.simpleQuery("SELECT 1")) == Seq("25P02"))
+    assert(tags(c.executeQuery("ROLLBACK")) == Seq("ROLLBACK"))
+    val after = c.executeQuery("SELECT 1 AS one")
+    assert(rows(after) == Seq(Seq("1")) && after.last._2.head == 'I'.toByte)
+    c.close()
+  }
+
+  test("EXPLAIN over Bind answers in PG's QUERY PLAN shape") {
+    val c = new Jdbc(port); c.connect()
+    val msgs = c.executeQuery("EXPLAIN SELECT 1")
+    assert(errorCodes(msgs).isEmpty, msgs.map(m => new String(m._2, UTF_8)))
+    assert(columns(msgs) == Seq(("QUERY PLAN", 25)))
+    assert(rows(msgs).nonEmpty)
+    c.close()
   }
 
   test("getColumns-shaped query resolves attributes for a store table") {

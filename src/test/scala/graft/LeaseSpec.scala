@@ -55,6 +55,40 @@ class LeaseSpec extends SparkSpecBase {
     (proc, lastAcked)
   }
 
+  /** `count(*)` of `table` through a wire server on `store`, over
+    * Parse/Bind/Execute/Sync. */
+  private def wireCount(store: Store, table: String): Long = {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val server = new PgWireServer(spark, store, 0)
+    val sock = new java.net.Socket("127.0.0.1", server.start())
+    try {
+      val in = new java.io.DataInputStream(sock.getInputStream)
+      val out = new java.io.DataOutputStream(sock.getOutputStream)
+      def cstr(v: String): Array[Byte] = v.getBytes(UTF_8) :+ 0.toByte
+      def frame(tpe: Char, body: Array[Byte]): Unit = {
+        out.writeByte(tpe); out.writeInt(4 + body.length); out.write(body)
+      }
+      def untilReady(): List[(Char, Array[Byte])] = Iterator.continually {
+        val tpe = in.read().toChar
+        val body = new Array[Byte](in.readInt() - 4)
+        in.readFully(body)
+        (tpe, body)
+      }.takeWhile(_._1 != 'Z').toList
+      val params = cstr("user") ++ cstr("graft") ++ cstr("database") ++ cstr("graft") :+ 0.toByte
+      out.writeInt(8 + params.length); out.writeInt(196608); out.write(params); out.flush()
+      untilReady()
+      frame('P', cstr("") ++ cstr(s"SELECT count(*) AS n FROM $table") ++ Array[Byte](0, 0))
+      frame('B', cstr("") ++ cstr("") ++ Array.fill[Byte](6)(0))
+      frame('E', cstr("") ++ Array.fill[Byte](4)(0))
+      frame('S', Array.emptyByteArray); out.flush()
+      val msgs = untilReady()
+      val row = msgs.find(_._1 == 'D').map(_._2).getOrElse(
+        sys.error("no row: " + msgs.map(m => new String(m._2, UTF_8))))
+      // DataRow: field count (2 bytes), length (4), text
+      new String(row, 6, row.length - 6, UTF_8).toLong
+    } finally { sock.close(); server.stop() }
+  }
+
   test("two JVMs, one warehouse: live holder refuses the second writer; SIGKILL hands over without losing an acked commit") {
     val wh = java.nio.file.Files.createTempDirectory("graft-lease2jvm").toString
     val batch = 2000
@@ -123,6 +157,11 @@ class LeaseSpec extends SparkSpecBase {
       while (lastAcked.get < target && System.nanoTime() < deadline)
         Thread.sleep(10)
       assert(lastAcked.get >= target, "writer stalled")
+      // JDBC's path, Parse/Bind/Execute, follows the chain too; counted
+      // first, so its own Bind has to re-sync the reader
+      val viaWire = wireCount(reader, "crash_t")
+      assert(viaWire > n1 && viaWire % batch == 0,
+        s"a Bind on the reader must follow the commit chain: $n1 -> $viaWire")
       val n2 = count()
       assert(n2 > n1,
         s"reader must follow the commit chain without remounting: $n1 -> $n2")

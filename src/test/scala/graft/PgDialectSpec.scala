@@ -22,6 +22,27 @@ class PgDialectSpec extends SparkSpecBase {
     }
   }
 
+  test("one read path: only planRead chains the read steps; the wire server calls none") {
+    def src(path: String) =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+    val steps = Seq("maybeRefreshCatalog", "rewriteTimeTravel", "translateSelectCached",
+      "planWithRollup", "bindTxnReads")
+    val wire = src("src/main/scala/graft/wire/PgWireServer.scala")
+    steps.foreach(f => assert(wire.indexOf(f) < 0, s"PgWireServer names $f"))
+    val dialect = src("src/main/scala/graft/pgdialect/PgDialect.scala")
+    val start = dialect.indexOf("  def planRead(")
+    val end = dialect.indexOf("\n  }\n", start)
+    assert(start >= 0 && end > start, "PgDialect.planRead not found")
+    steps.foreach { f =>
+      val calls = s"(?<!def )\\b$f\\(".r.findAllMatchIn(dialect).map(_.start).toSeq
+      val (inside, outside) = calls.partition(i => i > start && i < end)
+      assert(inside.size == 1, s"planRead calls $f once")
+      // bindCurrentTxn rebinds DML source frames, which are not reads
+      val allowed = if (f == "bindTxnReads") 1 else 0
+      assert(outside.size == allowed, s"$f is called outside planRead")
+    }
+  }
+
   test("repeated statements skip translation and analysis via the caches") {
     import spark.implicits._
     Tables.registerAll(spark, sfDir)
