@@ -367,7 +367,6 @@ object Tables {
         try body catch { case e: Throwable =>
           failures += 1
           System.err.println(s"[tables] $what failed: ${e.getMessage}") }
-      PgDialect.catalogEpoch.incrementAndGet()
       names.foreach(n =>
         step(s"register $n")(df(spark, dir, n).createOrReplaceTempView(n)))
       step("functions")(PgFunctions.register(spark))

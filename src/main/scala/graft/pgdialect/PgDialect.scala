@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, View}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField, StructType}
 
 /** Postgres-dialect front end (SURVEY §2.A statement surface + §2.B
@@ -25,10 +28,10 @@ object PgDialect {
   //  - translation cache: pure text→text, keyed by the settings that alter
   //    translation (strip_schemas, scalar_subquery_first_row) — survives DDL.
   //  - plan cache: final SQL → analyzed DataFrame. A DataFrame binds the
-  //    temp-view plans AT ANALYSIS TIME, so any catalog mutation (version
-  //    flip, DDL, catalog-view refresh, base-table re-registration) bumps
-  //    [[catalogEpoch]] and orphans older entries; the session timezone is
-  //    part of the key because Catalyst folds it into timestamp exprs.
+  //    temp-view plans AT ANALYSIS TIME, so an entry serves only while every
+  //    relation name it bound still resolves to the same thing (see
+  //    [[cachedPlan]]); the session timezone is part of the key because
+  //    Catalyst folds it into timestamp exprs.
   /** Thread-safe access-order LRU. Eviction is PER ENTRY (eldest out), not
     * a full flush: a busy multi-tenant server crossing the old size-capped
     * `clear()` re-translated/re-planned every cached statement at once —
@@ -62,7 +65,7 @@ object PgDialect {
   }
 
   private val translationCache = new LruCache[String, String](4096)
-  private val planCache = new LruCache[String, DataFrame](1024)
+  private val planCache = new LruCache[String, (DataFrame, Seq[(CatalogTable, Boolean)])](1024)
   // version-retention registry: open snapshot-isolated txns register here
   // so VACUUM/expireVersions never deletes a version a live txn has
   // pinned (PG's vacuum holds tuples for open snapshots the same way).
@@ -88,15 +91,13 @@ object PgDialect {
   /** Counter hooks (specs assert cache hits skip work). */
   private[graft] val translations = new java.util.concurrent.atomic.AtomicLong()
   private[graft] val planBuilds = new java.util.concurrent.atomic.AtomicLong()
-  /** Bumped by every catalog-affecting mutation (Store.persistCatalog /
-    * publish, PgCatalog refreshes, Tables.registerAll). */
-  private[graft] val catalogEpoch = new java.util.concurrent.atomic.AtomicLong()
 
   private def translationSettingsKey: String =
     SessionSettings.get("graft.strip_schemas").getOrElse("public,main") + "|" +
       SessionSettings.get("graft.scalar_subquery_first_row").getOrElse("off") + "|" +
       SessionSettings.get("graft.system_catalog").getOrElse("")
 
+  private val pgTablesOrViewsRe = "(?<![A-Z_])PG_(TABLES|VIEWS)(?![A-Z_])".r
   /** Catalog refresh trigger (query_remapper_table.go:46-62,136-250): a
     * statement touching the live-DDL-reflecting catalog relations sees the
     * CURRENT table + matview population. A step of [[planRead]], so JDBC's
@@ -108,8 +109,7 @@ object PgDialect {
         || upper.contains("GRAFT_INDEX_STATS")
         || upper.contains("GRAFT_WAREHOUSE_STATS")
         || upper.contains("PG_CLASS") || upper.contains("PG_ATTRIBUTE")
-        || "(?<![A-Z_])PG_TABLES(?![A-Z_])".r.findFirstIn(upper).isDefined
-        || "(?<![A-Z_])PG_VIEWS(?![A-Z_])".r.findFirstIn(upper).isDefined
+        || pgTablesOrViewsRe.findFirstIn(upper).isDefined
         || upper.contains("PG_GET_VIEWDEF") || upper.contains("PG_DESCRIPTION")
         || upper.contains("OBJ_DESCRIPTION") || upper.contains("COL_DESCRIPTION"))
       PgCatalog.refreshDynamic(spark, store)
@@ -276,7 +276,6 @@ object PgDialect {
   private def snapshotRelation(spark: SparkSession, store: Store,
       dir: String, schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
     // schema.json, not catalogString: the key must carry StructField
     // METADATA (PgTypes.LogicalKey tags time/timetz stored as LongType) or
     // two schemas differing only in a logical tag would share one cached
@@ -299,9 +298,9 @@ object PgDialect {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       noteRead: (String, Int) => Unit = (_, _) => ())
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, View}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression, SubqueryExpression}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 
     def substitute(lr: LogicalRelation): LogicalPlan = lr.relation match {
       case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
@@ -383,8 +382,8 @@ object PgDialect {
 
   /** Translated SQL → analyzed plan through the aggregate-rollup rewrite
     * (RollupRewrite): a GROUP BY over a base table with a FRESH incremental
-    * matview answers from the view. The rewrite decision depends only on
-    * catalog state, which is part of the plan-cache key via catalogEpoch.
+    * matview answers from the view. The rewrite runs on every call, ahead
+    * of the plan cache, so its decision always reads the current catalog.
     * `allowAutoRefresh` gates the SET graft.rollup_auto_refresh = on
     * stale-view refresh (false on paths that must not mutate, e.g.
     * Describe). */
@@ -456,19 +455,37 @@ object PgDialect {
     try spark.table(name).columns.toSet
     catch { case _: Exception => Set.empty }
 
-  /** Parse/analyze `finalSql` once per (session, epoch, timezone); later
-    * identical statements reuse the analyzed DataFrame. The SESSION identity
-    * is part of the key: a DataFrame is bound to the SparkSession that
-    * analyzed it, so a second session in the same JVM (tests, embedded
-    * tooling) must never be handed a frame whose plan resolves the OTHER
-    * session's temp views. */
+  /** Parse/analyze `finalSql` once per (session, timezone) and reuse the
+    * analyzed DataFrame while every relation its analysis resolved by name
+    * still resolves to the same thing: a temp view to the very `View.desc`
+    * instance bound (a re-registration mints a new one, which can equal
+    * the old by value), a catalog table to equal metadata (a bucketed
+    * replace moves its location). The SESSION identity is part of the
+    * key: a DataFrame is bound to the SparkSession that analyzed it, so a
+    * second session in the same JVM (tests, embedded tooling) must never
+    * be handed a frame whose plan resolves the OTHER session's temp views. */
   def cachedPlan(spark: SparkSession, finalSql: String): DataFrame = {
-    val key = s"${System.identityHashCode(spark)}\n${catalogEpoch.get}\n" +
+    val key = s"${System.identityHashCode(spark)}\n" +
       spark.conf.get("spark.sql.session.timeZone", "") + "\n" + finalSql
-    planCache.computeIfAbsent(key) {
+    val cat = spark.sessionState.catalog
+    planCache.get(key).filter(_._2.forall { case (meta, temp) =>
+      val view = cat.getRawTempView(meta.identifier.table)
+      if (temp) view.exists(_.tableMeta eq meta) else view.isEmpty &&
+        scala.util.Try(cat.getTableMetadata(meta.identifier)).toOption.contains(meta)
+    }).fold {
       planBuilds.incrementAndGet()
-      spark.sql(finalSql)
-    }
+      val df = spark.sql(finalSql)
+      planCache.put(key, (df, boundRelations(df.queryExecution.analyzed)))
+      df
+    }(_._1)
+  }
+
+  /** (metadata, is a temp view) of each relation analysis resolved by name
+    * in `plan` and its subquery expressions, not entering a view's plan. */
+  private def boundRelations(plan: LogicalPlan): Seq[(CatalogTable, Boolean)] = plan match {
+    case v: View => Seq(v.desc -> v.isTempView)
+    case r: LogicalRelation => r.catalogTable.map(_ -> false).toSeq
+    case p => (p.children ++ p.subqueries).flatMap(boundRelations)
   }
 
   // ---- pg_stat_statements ------------------------------------------------
@@ -3066,6 +3083,7 @@ object PgDialect {
     val sb = new StringBuilder
     var i = 0
     val upper = sql.toUpperCase
+    val keyEnd = "(LIMIT|OFFSET|FETCH|FOR|ROWS|RANGE|GROUPS)\\b".r.pattern.matcher(upper)
     while (i < sql.length) {
       val at = upper.indexOf("ORDER BY", i)
       if (at < 0) { sb.append(sql.substring(i)); i = sql.length }
@@ -3097,9 +3115,8 @@ object PgDialect {
           } else if (!inStr && c == ',' && depth == 0) {
             flushKey(j); sb.append(','); keyStart = j + 1
           } else if (!inStr && depth == 0 &&
-              "(?i)^(LIMIT|OFFSET|FETCH|FOR|ROWS|RANGE|GROUPS)\\b".r
-                .findFirstIn(upper.substring(j)).isDefined &&
-              (j == 0 || sql.charAt(j - 1).isWhitespace)) {
+              (j == 0 || sql.charAt(j - 1).isWhitespace) &&
+              keyEnd.region(j, upper.length).lookingAt()) {
             flushKey(j); done = true
           }
           if (!done) j += 1

@@ -847,7 +847,6 @@ object PgCatalog {
     SessionSettings.withSessionIfUnbound(spark)(refreshStatsScoped(spark))
 
   private def refreshStatsScoped(spark: SparkSession): Unit = synchronized {
-    PgDialect.catalogEpoch.incrementAndGet()
     import spark.implicits._
     TableStats.pgStatsRows
       .toDF("schemaname", "tablename", "attname", "null_frac", "avg_width",
@@ -864,7 +863,6 @@ object PgCatalog {
     SessionSettings.withSessionIfUnbound(spark)(refreshInfoSchemaScoped(spark))
 
   private def refreshInfoSchemaScoped(spark: SparkSession): Unit = synchronized {
-    PgDialect.catalogEpoch.incrementAndGet()
     import spark.implicits._
     val views = spark.catalog.listTables().collect().map(_.name)
       .filter(n => !n.startsWith("pg_") && !n.startsWith("information_schema_")
@@ -923,7 +921,6 @@ object PgCatalog {
     SessionSettings.withSessionIfUnbound(spark)(refreshDynamicScoped(spark, store))
 
   private def refreshDynamicScoped(spark: SparkSession, store: Store): Unit = synchronized {
-    PgDialect.catalogEpoch.incrementAndGet()
     import spark.implicits._
     val mvs = store.matviewNames
     // the store's plain tables (the synced-table population): relkind 'r'

@@ -1453,9 +1453,6 @@ class Store(spark: SparkSession, val warehouse: String) {
     // remount-required error is the safe degradation.
     ensureLease(reloadOnAcquire = false)
     leaseFenced().foreach(leaseLost)
-    // every catalog mutation invalidates the dialect's analyzed-plan cache
-    // (cached DataFrames bind the PRE-mutation temp-view plans)
-    PgDialect.catalogEpoch.incrementAndGet()
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val rootNode = om.createObjectNode()
     val vs = rootNode.putObject("versions")
@@ -1638,7 +1635,6 @@ class Store(spark: SparkSession, val warehouse: String) {
     * views survive. */
   private def loadCatalogSnapshot(clear: Boolean): Unit = synchronized {
     if (clear) {
-      PgDialect.catalogEpoch.incrementAndGet()
       versions.clear(); matviewDefs.clear(); ivmViews.clear()
       streamBatchIds.clear(); dirAliases.clear(); dedupIndexes.clear()
       dedupIndexedVersion.clear(); annIndexes.clear(); annIndexedVersion.clear()
@@ -3873,12 +3869,6 @@ class Store(spark: SparkSession, val warehouse: String) {
     // SQL views re-bind so they read the new snapshot (their temp views
     // pinned the previous version's plan); analysis-only, no jobs run
     if (viewDefs.nonEmpty) registerViews()
-    // second epoch bump AFTER the view rebind: a statement analyzed in the
-    // window between persistCatalog's bump and the rebind would otherwise
-    // cache a plan bound to the PREVIOUS version's files under the new
-    // epoch — served stale (or failing, post-rollback) forever
-    PgDialect.catalogEpoch.incrementAndGet()
-    ()
   }
 
   def createMatview(name: String, defn: String, withData: Boolean = true): Unit = {
@@ -3998,8 +3988,6 @@ class Store(spark: SparkSession, val warehouse: String) {
     registerView(name, vd) // validates by analyzing; throws before any state
     viewDefs(name) = vd
     if (durable) persistCatalog()
-    else PgDialect.catalogEpoch.incrementAndGet()
-    ()
   }
 
   def dropView(name: String, ifExists: Boolean = false): Unit = {
@@ -4032,24 +4020,25 @@ class Store(spark: SparkSession, val warehouse: String) {
     named.createOrReplaceTempView(name)
   }
 
-  /** Re-register every view against the current base-table bindings.
-    * Views may reference other views, and the map carries no dependency
-    * order — iterate to a fixpoint (each pass registers at least the views
-    * whose bases are ready; N views need at most N passes). Per-view
+  /** Re-register every view against the current base-table bindings,
+    * bases first: a temp view stores its analysed plan, so a view
+    * registered before a view it reads would keep that view's previous
+    * binding. A view reads another when its definition names it (a name
+    * that only spells a column or a literal merely reorders). Each view is
+    * replaced in place, so no name is unregistered at any point. Per-view
     * degradation: a view whose base is GONE (dropped table, partial mount)
     * costs that view, not the catalog. */
   private def registerViews(): Unit = {
-    var pending = viewDefs.toSeq
-    var progressed = true
-    while (pending.nonEmpty && progressed) {
-      progressed = false
-      pending = pending.flatMap { case e @ (n, vd) =>
-        try { registerView(n, vd); progressed = true; None }
-        catch { case _: Exception => Some(e) }
-      }
+    val defs = viewDefs.toMap
+    val seen = scala.collection.mutable.Set[String]()
+    def visit(n: String): Unit = if (seen.add(n)) {
+      defs.keys.filter(m => m != n && ("(?i)(?<![\\w$])" + java.util.regex.Pattern
+        .quote(m) + "(?![\\w$])").r.findFirstIn(defs(n).defn).isDefined).foreach(visit)
+      try registerView(n, defs(n))
+      catch { case _: Exception =>
+        System.err.println(s"[store] view $n failed to register (base missing?)") }
     }
-    pending.foreach { case (n, _) =>
-      System.err.println(s"[store] view $n failed to register (base missing?)") }
+    defs.keys.toSeq.sorted.foreach(visit)
   }
 
   /** Plain (non-matview) table names — the synced-table population the
@@ -4817,9 +4806,6 @@ object Store {
     // (DDL's foreign-staging guard) — `tables` itself is owner-thread-only
     private[graft] val stagedNames =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    /** Tables with at least one staged (uncommitted) write. */
-    def stagedTables: Seq[String] =
-      tables.iterator.collect { case (n, e) if e.count > 0 => n }.toSeq
   }
   private[graft] final class StagedTable(val base: Int) {
     var count: Int = 0

@@ -41,6 +41,20 @@ class PgDialectSpec extends SparkSpecBase {
       val allowed = if (f == "bindTxnReads") 1 else 0
       assert(outside.size == allowed, s"$f is called outside planRead")
     }
+    // plan-cache validity is decided only in PgDialect, from what each plan
+    // bound: no catalog counter anywhere, and the catalog's writers never
+    // name the cache
+    import scala.jdk.CollectionConverters._
+    val epoch = "catalog" + "Epoch"
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    try files.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_)).foreach { f =>
+      assert(!src(f.toString).contains(epoch), s"$f names $epoch")
+    } finally files.close()
+    Seq("sources/Store.scala", "sources/PgCatalog.scala", "Tables.scala").foreach { f =>
+      val text = src(s"src/main/scala/graft/$f")
+      Seq("planCache", "cachedPlan", "plan cache", "plan-cache").foreach(n =>
+        assert(!text.contains(n), s"$f names the $n"))
+    }
   }
 
   test("repeated statements skip translation and analysis via the caches") {
@@ -56,14 +70,46 @@ class PgDialectSpec extends SparkSpecBase {
     assert(PgDialect.planBuilds.get == p1,
       "second execution must not re-analyze")
     assert(second == first)
-    // a catalog mutation invalidates cached PLANS (stale temp-view bindings
-    // must never serve): query a store table, mutate it, re-query
+    // a commit re-plans exactly the statements over what it re-registered
+    // (stale temp-view bindings must never serve): query a store table and
+    // a view over it, mutate the table, re-query
     store.replace("cache_t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    PgDialect.execute(spark, store, "CREATE VIEW cache_v AS SELECT count(*) AS n FROM cache_t")
     val q = "SELECT count(*) AS n FROM cache_t"
+    val qv = "SELECT n FROM cache_v"
     assert(rows(q).head.getLong(0) == 2)
+    assert(rows(qv).head.getLong(0) == 2)
     store.append("cache_t", Seq((3L, "c")).toDF("k", "v"))
+    val p2 = PgDialect.planBuilds.get
+    assert(rows(stmt) == first)
+    assert(PgDialect.planBuilds.get == p2, "a commit to cache_t must not re-plan region")
     assert(rows(q).head.getLong(0) == 3,
       "mutation must invalidate the cached plan")
+    assert(rows(qv).head.getLong(0) == 3, "the view over cache_t must re-plan")
+    assert(PgDialect.planBuilds.get == p2 + 2)
+    // a catalog-view refresh re-plans only statements over that view
+    rows("SELECT relname FROM pg_class")
+    val p3 = PgDialect.planBuilds.get
+    assert(rows(stmt) == first)
+    assert(PgDialect.planBuilds.get == p3, "a pg_class refresh must not re-plan region")
+    PgDialect.execute(spark, store, "DROP VIEW cache_v")
+    // a name re-registered right after its plan was cached binds anew
+    spark.range(3).createOrReplaceTempView("cache_tv")
+    val tv = "SELECT count(*) AS n FROM cache_tv"
+    assert(PgDialect.cachedPlan(spark, tv).head().getLong(0) == 3)
+    spark.range(5).createOrReplaceTempView("cache_tv")
+    assert(PgDialect.cachedPlan(spark, tv).head().getLong(0) == 5)
+    spark.catalog.dropTempView("cache_tv")
+    // a session-catalog table (bucketed layout) is reused until replaced
+    store.replaceBucketed("cache_b", spark.range(4).toDF("k"), "k", 2)
+    val qb = "SELECT count(*) AS n FROM cache_b"
+    assert(PgDialect.cachedPlan(spark, qb).head().getLong(0) == 4)
+    val p4 = PgDialect.planBuilds.get
+    assert(PgDialect.cachedPlan(spark, qb).head().getLong(0) == 4)
+    assert(PgDialect.planBuilds.get == p4, "an unchanged catalog table must not re-plan")
+    store.replaceBucketed("cache_b", spark.range(6).toDF("k"), "k", 2)
+    assert(PgDialect.cachedPlan(spark, qb).head().getLong(0) == 6)
+    store.drop("cache_b")
     // ...while a settings change invalidates the TRANSLATION key
     PgDialect.execute(spark, store, "SET graft.strip_schemas = 'public,main,extra'")
     val t2 = PgDialect.translations.get
@@ -588,18 +634,24 @@ class PgDialectSpec extends SparkSpecBase {
       case Rows(df, _) => assert(df.columns.toSeq == Seq("a", "b"))
       case other => fail(s"$other")
     }
-    // a view over a view registers regardless of map iteration order
-    exec("CREATE VIEW vw_g2 AS SELECT sum(n) AS total FROM vw_g")
-    exec("SELECT total FROM vw_g2") match {
-      case Rows(df, _) => assert(df.collect()(0).getLong(0) == 3L)
+    // a view over a view registers regardless of map iteration order, and
+    // a base commit re-binds it after the view it reads ("vw_top" iterates
+    // before "vw_g" in the view map)
+    exec("CREATE VIEW vw_top AS SELECT sum(n) AS total FROM vw_g")
+    def total() = exec("SELECT total FROM vw_top") match {
+      case Rows(df, _) => df.collect()(0).getLong(0)
       case other => fail(s"$other")
     }
+    assert(total() == 3L)
+    exec("DELETE FROM vwt WHERE id = 1")
+    assert(viewRows() == Seq((1L, 2L)))
+    assert(total() == 2L, "the outer view must read the base commit")
     // durable views survive a fresh mount of the same warehouse; temp do not
     val st2 = new Store(spark, wh)
-    assert(st2.viewNames.contains("vw_g") && st2.viewNames.contains("vw_g2")
+    assert(st2.viewNames.contains("vw_g") && st2.viewNames.contains("vw_top")
       && !st2.viewNames.contains("vw_tmp"))
-    exec("DROP VIEW vw_g2")
-    assert(viewRows() == Seq((1L, 3L)))
+    exec("DROP VIEW vw_top")
+    assert(viewRows() == Seq((1L, 2L)))
     // pg_get_viewdef over a literal name answers with the definition
     exec("SELECT pg_get_viewdef('vw_g'::regclass) AS d") match {
       case Rows(df, _) =>
@@ -985,6 +1037,15 @@ class PgDialectSpec extends SparkSpecBase {
       == "SELECT a FROM t ORDER BY coalesce(a, b) NULLS LAST, c NULLS LAST")
     assert(translateSelect("SELECT row_number() OVER (ORDER BY x DESC) FROM t")
       == "SELECT row_number() OVER (ORDER BY x DESC NULLS FIRST) AS row_number FROM t")
+    // linear in the text after ORDER BY: a ~1 MB key list translates in
+    // seconds, with the same output shape as the short inputs above
+    val keys = (1 to 120000).map(i => s"c$i")
+    val t0 = System.nanoTime
+    val big = translateSelect(s"SELECT a FROM t ORDER BY ${keys.mkString(", ")} LIMIT 3")
+    val secs = (System.nanoTime - t0) / 1e9
+    assert(secs < 10, s"1 MB ORDER BY list took $secs s")
+    assert(big == "SELECT a FROM t ORDER BY " +
+      keys.map(_ + " NULLS LAST").mkString(", ") + " LIMIT 3")
   }
 
   test("operator and qualification translation") {
